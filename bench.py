@@ -1196,15 +1196,13 @@ def _compaction_ingest_block(
 
     # guard 3: the writer side of the handshake — a batch must refuse
     # while the maintenance lock is held
-    AI._acquire_maintenance_lock(AI.Path(idx))
-    try:
-        w(crash_batch.select(F.col("vec_id") + 10_000_000, "embedding"), 99)
-        failures.append("compaction block: writer ignored maintenance lock")
-        block["writer_refused_under_lock"] = False
-    except RuntimeError:
-        block["writer_refused_under_lock"] = True
-    finally:
-        AI._release_maintenance_lock(AI.Path(idx))
+    with AI.FileLease(AI.Path(idx), AI.MAINT_LOCK):
+        try:
+            w(crash_batch.select(F.col("vec_id") + 10_000_000, "embedding"), 99)
+            failures.append("compaction block: writer ignored maintenance lock")
+            block["writer_refused_under_lock"] = False
+        except RuntimeError:
+            block["writer_refused_under_lock"] = True
 
     t0 = time.perf_counter()
     block["compact"] = AI.compact_ann_index(spark, idx)

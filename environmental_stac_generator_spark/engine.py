@@ -49,9 +49,6 @@ class EnvStacEngine:
     # TransformFn) for environments without pyproj; None -> pyproj
     bbox_transform: Callable | None = None
     cog_encoder: raster.Encoder = field(default=raster.fake_tiff_encoder)
-    # encode COGs from packed grid slabs (second decode pass, ~50x
-    # less shuffle; byte-identical output) instead of the long rows
-    packed_encode: bool = True
     # frames process() cached, released by release() — at 100 TB the
     # scan relation otherwise pins executor memory for the engine's
     # lifetime
@@ -112,22 +109,17 @@ class EnvStacEngine:
             Path(self.output_dir) / "config.json",
             {self.catalog_name: {"forecast_frequency": forecast_frequency}},
         )
-        if self.packed_encode:
-            # ONE slab-level scan feeds everything: the long relation
-            # is derived JVM-side (posexplode), so per-cell data never
-            # crosses a Python boundary, and both raster sinks regroup
-            # packed slabs instead of cells.
-            grids = self._track(
-                netcdf.scan_netcdf_grids(
-                    self.spark, input_path, decoder=self.decoder
-                ).persist()
-            )
-            long_df = netcdf.long_from_grids(grids)
-        else:
-            grids = None
-            # the reference re-opens each file per stage (a missed
-            # optimization, SURVEY §4) — we scan once and reuse
-            long_df = self._track(self.scan(input_path).persist())
+        # ONE slab-level scan feeds everything (the reference re-opens
+        # each file per stage, a missed optimization, SURVEY §4): the
+        # long relation is derived JVM-side (posexplode), so per-cell
+        # data never crosses a Python boundary, and both raster sinks
+        # regroup packed slabs instead of cells.
+        grids = self._track(
+            netcdf.scan_netcdf_grids(
+                self.spark, input_path, decoder=self.decoder
+            ).persist()
+        )
+        long_df = netcdf.long_from_grids(grids)
         crs_df = self._collection_crs(input_path)
         info = fc.forecast_info(
             long_df, crs_by_collection=crs_df, bbox_transform=self.bbox_transform
@@ -158,34 +150,22 @@ class EnvStacEngine:
         if not stac_only:
             # sinks are actions: materialize now (persist so callers
             # can inspect the result rows without re-encoding)
-            if self.packed_encode:
-                cog_results = raster.encode_cogs_grids(
-                    grids,
-                    self.output_dir,
-                    encoder=self.cog_encoder,
-                    overwrite=overwrite,
-                    leadtime_unit=unit,
-                    leadtime_step=step,
-                ).persist()
-                self._track(cog_results).count()
-                nc_results = raster.write_netcdf_slices_grids(
-                    grids, self.output_dir, overwrite=overwrite
-                ).persist()
-                self._track(nc_results).count()
-            else:
-                cog_results = raster.encode_cogs(
-                    long_df,
-                    self.output_dir,
-                    encoder=self.cog_encoder,
-                    overwrite=overwrite,
-                    leadtime_unit=unit,
-                    leadtime_step=step,
-                ).persist()
-                self._track(cog_results).count()
-                nc_results = raster.write_netcdf_slices(
-                    long_df, self.output_dir, overwrite=overwrite
-                ).persist()
-                self._track(nc_results).count()
+            # COGs and NetCDF slices are encoded from the packed grid
+            # slabs (~50x less shuffle than the long rows, byte-identical
+            # output to the long-row sinks)
+            cog_results = raster.encode_cogs_grids(
+                grids,
+                self.output_dir,
+                encoder=self.cog_encoder,
+                overwrite=overwrite,
+                leadtime_unit=unit,
+                leadtime_step=step,
+            ).persist()
+            self._track(cog_results).count()
+            nc_results = raster.write_netcdf_slices_grids(
+                grids, self.output_dir, overwrite=overwrite
+            ).persist()
+            self._track(nc_results).count()
             results["cog_results"] = cog_results
             results["netcdf_results"] = nc_results
         # adopt any module-tracked pair-bucket pins this process() run

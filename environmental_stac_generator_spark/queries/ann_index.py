@@ -82,6 +82,7 @@ import uuid
 import warnings
 import weakref
 from collections import namedtuple
+from contextlib import contextmanager, suppress
 from datetime import datetime, timezone
 from pathlib import Path
 
@@ -121,22 +122,15 @@ _VIEW_PINS: dict[tuple[int, str], dict] = {}
 # commit re-pins at every epoch commit, and a finalizer per re-pin
 # would accumulate unboundedly on a long-lived session)
 _PIN_FINALIZERS: dict[tuple[int, str], weakref.finalize] = {}
-# per-process fencing token for each held maintenance lock (keyed by
-# resolved index root): written into the lock body at the O_EXCL
-# acquire, re-verified by every heartbeat/release — a same-pid/host
-# re-acquire after a force-release (pid recycling, or the same
-# process re-entering) can no longer pass the ownership check with a
-# stale lease (ADVICE r15 #1)
-_LOCK_TOKENS: dict[str, str] = {}
 
 META_NAME = "_ann_meta.json"
 # Exclusive maintenance lock (ADVICE r11 #1): compaction holds it for
 # its whole run; the stream writer refuses while it exists. Mutual
 # exclusion is a two-sided handshake, not check-then-act — see
-# _refuse_if_maintenance for the ordering argument. The lock carries
-# owner metadata (pid/host/acquire time, VERDICT r12 #4) so an
-# operator deciding whether the holder is dead has evidence; see
-# release_stale_maintenance_lock for the recovery contract.
+# _refuse_if_maintenance for the ordering argument. Both index locks
+# are one FileLease primitive: owner metadata (VERDICT r12 #4), a
+# fencing token, a heartbeat, and release_stale_lock as the recovery
+# contract.
 MAINT_LOCK = "_maintenance.lock"
 # Epoch manifest (VERDICT r12 #1 — reader snapshot isolation): ONE
 # atomically-replaced JSON naming the index's exact live data files
@@ -153,18 +147,17 @@ MAINT_LOCK = "_maintenance.lock"
 # dominated fresh-probe latency at large K (ADVICE r12 #1).
 CURRENT_NAME = "_current.json"
 # Exclusive APPENDER lease (VERDICT r15 #2): every non-maintenance
-# committer — append_ann_index, the streaming sink's per-batch
-# commit, delete_ann_ids — holds it for its whole write+commit, so
-# two concurrent appenders can never interleave the ledger's or the
-# epoch manifest's read-modify-write (the single-writer contract,
-# previously a docstring, enforced mechanically). Two-sided
-# handshake with maintenance: an appender takes this lease BEFORE
-# re-checking the maintenance lock; a maintainer takes its lock
-# BEFORE scanning for this lease (_refuse_if_ingest_active) — no
-# interleaving lets both proceed. A crash mid-batch leaves the lease
-# on disk; acquisition auto-reclaims a PROVABLY-DEAD same-host
-# owner through an atomic rename-claim (see _appender_lease), and
-# release_stale_append_lock is the operator path for the rest.
+# committer — append_ann_index and the streaming sink's per-batch
+# commit — holds it for its whole write+commit, so two concurrent
+# appenders can never interleave the ledger's or the epoch manifest's
+# read-modify-write (the single-writer contract, previously a
+# docstring, enforced mechanically). Two-sided handshake with
+# maintenance: an appender takes this lease BEFORE re-checking the
+# maintenance lock; a maintainer takes its lock BEFORE scanning for
+# this lease (_refuse_if_ingest_active) — no interleaving lets both
+# proceed. A crash mid-batch leaves the lease on disk; FileLease
+# reclaims a PROVABLY-DEAD same-host owner by itself, and
+# release_stale_lock is the operator path for the rest.
 APPEND_LOCK = "_append.lock"
 # Committed-but-not-fully-applied compaction manifest (ADVICE r13 #3):
 # while it exists, a cell may hold BOTH its compacted file and the old
@@ -172,9 +165,10 @@ APPEND_LOCK = "_append.lock"
 # every committer that derives an epoch from a directory walk
 # (append, the stream sink's finalize) must refuse until a maintainer
 # replays it — otherwise the walk folds both copies into the live set
-# and serves permanent duplicates. Release→recover ordering after a
-# dead compactor: release_stale_maintenance_lock, then
-# compact_ann_index (whose first act, under the lock, is the replay).
+# and serves permanent duplicates. Recovery after a dead compactor:
+# compact_ann_index, whose first act under the lock is the replay (a
+# same-host dead owner's lock is reclaimed by the acquire; any other
+# needs release_stale_lock first).
 PENDING_NAME = "_ann_compaction.json"
 
 # lightweight centroid rows for the shared similarity kernels (which
@@ -383,493 +377,278 @@ def _atomic_write_json(path: Path, obj) -> None:
     os.replace(tmp, path)
 
 
-def _acquire_maintenance_lock(root: Path) -> None:
-    """Take the index's exclusive maintenance lock via O_CREAT|O_EXCL
-    — atomic on every filesystem that matters, so two maintainers can
-    never both hold it. The lock body records owner pid/host and the
-    ISO acquire time (VERDICT r12 #4): a stale lock (maintainer died
-    mid-run) blocks writers until removed, and the metadata is what an
-    operator adjudicates staleness against — via
-    :func:`release_stale_maintenance_lock`, which refuses while the
-    recorded owner is still alive. Exclusivity comes from the O_EXCL
-    create alone; the metadata write after it is advisory (a reader
-    racing the write sees an empty lock and reports "no metadata")."""
-    try:
-        fd = os.open(root / MAINT_LOCK, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise RuntimeError(
-            f"another maintainer holds {MAINT_LOCK} for {root} "
-            f"[{_lock_info_str(root)}]; remove it only if that "
-            "maintainer is known dead (release_stale_maintenance_lock)"
-        ) from None
-    token = uuid.uuid4().hex
-    try:
-        now = datetime.now(timezone.utc).isoformat(timespec="seconds")
-        os.write(
-            fd,
-            json.dumps(
-                {
-                    "pid": os.getpid(),
-                    "host": socket.gethostname(),
-                    "acquired_utc": now,
-                    # lease heartbeat (VERDICT r13 #3): the owner
-                    # refreshes this while working, so an age-based
-                    # release is a true lease — a live slow maintainer
-                    # that heartbeats is never releasable by age
-                    "heartbeat_utc": now,
-                    # acquire-generation fencing token (ADVICE r15
-                    # #1): heartbeats/releases verify the lock still
-                    # carries THIS acquire's token, so ownership
-                    # checks survive pid recycling and same-process
-                    # re-acquire after a force-release
-                    "token": token,
-                }
-            ).encode(),
-        )
-    finally:
-        os.close(fd)
-    _LOCK_TOKENS[str(Path(root).resolve())] = token
+class FileLease:
+    """One exclusive file lease on an index directory: ``MAINT_LOCK``
+    (compaction/vacuum) and ``APPEND_LOCK`` (append, stream sink) are
+    two names for this one primitive, under one set of rules. Use it
+    as a context manager, or call :meth:`acquire` / :meth:`release`.
 
+    - Acquire: ``O_CREAT|O_EXCL`` — atomic, so two acquirers can never
+      both hold it — then the body records ``pid``, ``host``,
+      ``acquired_utc``, ``heartbeat_utc`` and a per-acquire fencing
+      ``token``, which this object keeps. An existing lock is
+      reclaimed only when its owner is provably dead on this host;
+      a live or unverifiable owner makes acquire refuse and quote the
+      owner's metadata (:func:`release_stale_lock` is the operator
+      path for those). Exclusivity comes from the create alone: a
+      reader racing the metadata write sees ``{}`` ("no metadata").
+    - :meth:`heartbeat` refreshes ``heartbeat_utc`` after verifying
+      the lock still names this pid/host and this acquire's token, so
+      ``release_stale_lock(max_age_sec=...)`` measures a true lease;
+      :meth:`ticking` runs it on a background thread through long
+      phases.
+    - :meth:`release` removes the lock only while it still carries
+      this acquire's token (token-less pre-r16 locks: this pid/host).
+      A lock that was force-released and re-acquired — by another
+      process, a recycled pid, or this same process — survives its
+      previous holder's exit, and so does a metadata-less lock, which
+      is a second acquirer mid-create.
 
-def _heartbeat_lock(root: Path) -> None:
-    """Owner-side lease refresh: atomically rewrite the lock with a
-    fresh ``heartbeat_utc``. Called by the maintainers at natural
-    progress points (during the batched rewrite via
-    :class:`_LeaseHeartbeat`, before a compaction's commit sequence,
-    per vacuum pass). ``release_stale_maintenance_lock``'s
-    ``max_age_sec`` bound measures from the LAST heartbeat, making it
-    a lease rather than a creation-age guess.
+    Every removal (release, reclaim, operator release) goes through
+    :meth:`_remove_if`, so a lock is only ever removed while its body
+    is still the one the caller judged.
 
-    OWNERSHIP-VERIFYING (ADVICE r14 #1): the refresh first checks the
-    lock body still names THIS pid/host AND this acquire's fencing
-    token (ADVICE r15 #1) and raises if it does not — a lock that
-    vanished or was force-released and re-acquired by a second
-    maintainer means this process lost the lease mid-run, and
-    blindly rewriting the new owner's lock would split-brain the
-    index (two committers doing read-modify-write epoch commits). A
-    lock with NO owner metadata is likewise refused rather than
-    blind-rewritten (ADVICE r14 "wrong #2": rewriting it with only a
-    heartbeat would strip the same-host liveness check from
-    ``release_stale_maintenance_lock``). Callers abort BEFORE their
-    commit point on this error.
+    Scope: this is an advisory lock on a plain filesystem, with no
+    fencing the storage enforces. Between an ownership check and the
+    write that follows it, a force-release plus a second acquire can
+    still slip in; the heartbeat narrows that window to one function
+    body, reachable only through an operator force-release against a
+    live owner. Closing it needs a commit point the storage checks."""
 
-    Honest scope (ADVICE r15 #1): this NARROWS the split-brain
-    window, it does not close it — an advisory file lock has no
-    fencing the filesystem enforces, so between this check and the
-    ``os.rename`` below a force-release + second-maintainer acquire
-    can still be overwritten by this (now stale) heartbeat. The
-    residual window is the microseconds of this function body,
-    reachable only through an operator force-release against a LIVE
-    heartbeating maintainer — which ``release_stale_maintenance_lock``
-    refuses without ``force=True``. True closure needs a fencing
-    token the STORAGE checks (a CAS object store, or a lock service);
-    on a plain filesystem this check-then-rename is the ceiling.
+    _RETRIES = 3
 
-    The rewrite uses ``os.rename`` (identical POSIX atomicity to
-    ``os.replace``): the heartbeat is advisory lease METADATA, not a
-    commit point — keeping it off ``os.replace`` keeps the crash
-    sweep's fault-injection enumeration over commit-relevant sites
-    only (tests/test_ann_index.py pins those sites by the destination
-    path, and a dedicated lease test injects heartbeat faults
-    separately)."""
-    path = Path(root) / MAINT_LOCK
-    info = maintenance_lock_info(root)
-    if info is None:
-        raise RuntimeError(
-            f"lease heartbeat failed: {MAINT_LOCK} no longer exists "
-            f"under {root} — this maintainer's lock was released "
-            "mid-run; aborting before any commit"
-        )
-    if not info.get("pid") or not info.get("host"):
-        raise RuntimeError(
-            f"lease heartbeat refused: {MAINT_LOCK} under {root} has "
-            "no owner metadata — rewriting it would strip the "
-            "same-host liveness check from release_stale_"
-            "maintenance_lock; refusing to blind-rewrite"
-        )
-    me_pid, me_host = os.getpid(), socket.gethostname()
-    try:
-        owner_pid = int(info["pid"])
-    except (TypeError, ValueError):
-        owner_pid = None
-    if owner_pid != me_pid or info.get("host") != me_host:
-        raise RuntimeError(
-            f"lease heartbeat failed: {MAINT_LOCK} ownership lost — "
-            f"the lock now names pid {info.get('pid')} on "
-            f"{info.get('host')} (this maintainer is pid {me_pid} on "
-            f"{me_host}); a second maintainer acquired after a "
-            "release; aborting before any commit"
-        )
-    mine = _LOCK_TOKENS.get(str(Path(root).resolve()))
-    if info.get("token") is not None and info.get("token") != mine:
-        raise RuntimeError(
-            f"lease heartbeat failed: {MAINT_LOCK} carries a different "
-            "acquire-generation token — the lock was force-released "
-            "and re-acquired (possibly by a recycled pid on this "
-            "host); aborting before any commit"
-        )
-    info["heartbeat_utc"] = datetime.now(timezone.utc).isoformat(
-        timespec="seconds"
-    )
-    tmp = path.with_name(path.name + ".hb.tmp")
-    tmp.write_text(json.dumps(info))
-    os.rename(tmp, path)
-
-
-class _LeaseHeartbeat:
-    """Background lease refresh covering a LONG phase (the batched
-    compaction rewrite — the longest un-checkpointed stretch at
-    scale, ADVICE r14 #1): a daemon thread refreshes the maintenance
-    lock's ``heartbeat_utc`` every ``interval_sec`` while the Spark
-    job runs, so a cross-host operator honoring
-    ``release_stale_maintenance_lock(max_age_sec=...)`` can never
-    age-release a live maintainer mid-rewrite. An ownership-loss (or
-    any) heartbeat error is stashed, not raised in the thread —
-    callers must call :meth:`check` after the phase and BEFORE their
-    commit point so a lost lease aborts with zero commits."""
-
-    def __init__(self, root: Path, interval_sec: float):
+    def __init__(self, root: Path, name: str):
         self.root = Path(root)
-        self.interval = float(interval_sec)
-        self.error: BaseException | None = None
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._run, daemon=True)
+        self.name = name
+        self.path = self.root / name
+        self.role = "maintainer" if name == MAINT_LOCK else "appender"
+        self.token: str | None = None
+        # the first failed background tick, stashed for the owner's
+        # thread: the next heartbeat() raises it
+        self.lost: Exception | None = None
 
-    def _run(self) -> None:
-        while not self._stop.wait(self.interval):
-            try:
-                _heartbeat_lock(self.root)
-            except BaseException as exc:  # stash for the main thread
-                self.error = exc
-                return
-
-    def __enter__(self) -> "_LeaseHeartbeat":
-        self._thread.start()
-        return self
+    def __enter__(self) -> "FileLease":
+        return self.acquire()
 
     def __exit__(self, *exc) -> None:
-        self._stop.set()
-        self._thread.join()
+        self.release()
 
-    def check(self) -> None:
-        if self.error is not None:
+    @staticmethod
+    def describe(info: dict | None) -> str:
+        if not info:
+            return "no owner metadata (pre-r13 lock or owner mid-acquire)"
+        return (
+            f"owner pid {info.get('pid')} on {info.get('host')}, "
+            f"acquired {info.get('acquired_utc')}"
+        )
+
+    @staticmethod
+    def alive(info: dict | None) -> bool | None:
+        """True when the owner pid is verified alive on this host,
+        False when it provably exited, None when liveness cannot be
+        checked (another host, no metadata, missing or unparseable
+        pid). Only False lets a lock be reclaimed without an
+        operator."""
+        pid = str(info.get("pid")) if info else ""
+        if not pid.isdigit() or info.get("host") != socket.gethostname():
+            return None
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            return False
+        except PermissionError:
+            pass  # exists, owned by another user
+        return True
+
+    def acquire(self) -> "FileLease":
+        for _ in range(self._RETRIES):
+            try:
+                fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            except FileExistsError:
+                info = lock_info(self.root, self.name)
+                if info is not None and self.alive(info) is not False:
+                    raise RuntimeError(
+                        f"another {self.role} holds {self.name} for "
+                        f"{self.root} [{self.describe(info)}]; retry later, "
+                        "or release_stale_lock if it is known dead"
+                    ) from None
+                if info is not None:
+                    self._remove_if(info)  # provably dead owner
+                continue  # retry the O_EXCL create
+            self.token, self.lost = uuid.uuid4().hex, None
+            now = datetime.now(timezone.utc).isoformat(timespec="seconds")
+            body = dict(pid=os.getpid(), host=socket.gethostname())
+            body.update(acquired_utc=now, heartbeat_utc=now, token=self.token)
+            try:
+                os.write(fd, json.dumps(body).encode())
+            finally:
+                os.close(fd)
+            return self
+        raise RuntimeError(f"could not acquire {self.name}: live contention")
+
+    def _owns(self, info: dict) -> bool:
+        return (
+            str(info.get("pid")) == str(os.getpid())
+            and info.get("host") == socket.gethostname()
+            and info.get("token") in (None, self.token)
+        )
+
+    def heartbeat(self) -> None:
+        """Ownership-verifying lease refresh. Raises — and callers abort
+        before their commit point — when a background tick already
+        failed, when the lock is gone, when it has no owner metadata
+        (rewriting it would strip the same-host liveness check from
+        :func:`release_stale_lock`), or when it names another owner or
+        another acquire's token. The rewrite is ``os.rename``, not
+        ``os.replace``: the heartbeat is lease metadata, not a commit
+        point, and the crash sweep enumerates ``os.replace`` sites."""
+        if self.lost is not None:
             raise RuntimeError(
-                "lease heartbeat failed during the rewrite; aborting "
+                "lease heartbeat failed in a background tick; aborting "
                 "before any commit"
-            ) from self.error
+            ) from self.lost
+        info = lock_info(self.root, self.name)
+        if info is None:
+            msg = f"failed: {self.name} no longer exists (released mid-run)"
+        elif not info.get("pid") or not info.get("host"):
+            msg = (
+                f"refused: {self.name} has no owner metadata, and "
+                "rewriting it would strip release_stale_lock's same-host "
+                "liveness check"
+            )
+        elif not self._owns(info):
+            msg = (
+                f"failed: {self.name} ownership lost — it now names "
+                f"pid {info.get('pid')} on {info.get('host')}, token "
+                f"{info.get('token')} (this {self.role}: token {self.token})"
+            )
+        else:
+            info["heartbeat_utc"] = datetime.now(timezone.utc).isoformat(
+                timespec="seconds"
+            )
+            tmp = self.path.with_name(self.name + ".hb.tmp")
+            tmp.write_text(json.dumps(info))
+            os.rename(tmp, self.path)
+            return
+        raise RuntimeError(
+            f"lease heartbeat {msg} under {self.root}; aborting before any "
+            "commit"
+        )
+
+    @contextmanager
+    def ticking(self, interval_sec: float):
+        """Run :meth:`heartbeat` every ``interval_sec`` on a daemon
+        thread while the block runs. A failed tick stops the ticker and
+        is stashed on ``self.lost``; nothing is raised in the thread.
+        Pre-commit phases follow the block with a main-thread
+        :meth:`heartbeat`, which raises it; a roll-forward past its
+        commit point ignores it."""
+        stop = threading.Event()
+
+        def tick() -> None:
+            while not stop.wait(interval_sec):
+                try:
+                    self.heartbeat()
+                except Exception as exc:  # stash for the owner's thread
+                    self.lost = exc
+                    return
+
+        thread = threading.Thread(target=tick, daemon=True)
+        thread.start()
+        try:
+            yield
+        finally:
+            stop.set()
+            thread.join()
+
+    def release(self) -> None:
+        info = lock_info(self.root, self.name)
+        if info and self._owns(info):
+            self._remove_if(info)
+
+    def _remove_if(self, info: dict) -> bool:
+        """Remove the lock only if its body is still ``info``. An
+        atomic rename to a unique name claims it (two claimers: exactly
+        one wins the rename); a claim that holds a different body — the
+        lock was replaced after the caller read it — is put back with
+        ``os.link``, which never overwrites a lock created meanwhile."""
+        claim = self.path.with_name(f"{self.name}.claim-{uuid.uuid4().hex}")
+        try:
+            os.rename(self.path, claim)
+        except FileNotFoundError:
+            return False
+        same = lock_info(self.root, claim.name) == info
+        if not same:
+            with suppress(FileExistsError):
+                os.link(claim, self.path)
+        claim.unlink()
+        return same
 
 
-def maintenance_lock_info(root: Path) -> dict | None:
-    """The lock's owner metadata, or ``{}`` for a lock without any
-    (pre-r13 format, or the owner crashed between the O_EXCL create
-    and its metadata write), or ``None`` if no lock exists."""
-    p = Path(root) / MAINT_LOCK
+def lock_info(root: Path, name: str) -> dict | None:
+    """The owner metadata of lock ``name`` under ``root``: ``{}`` for a
+    lock without any (pre-r13 format, or an owner between its
+    ``O_EXCL`` create and its metadata write), ``None`` if no lock
+    exists."""
     try:
-        body = p.read_text()
+        obj = json.loads((Path(root) / name).read_text())
     except FileNotFoundError:
         return None
-    try:
-        obj = json.loads(body)
-        return obj if isinstance(obj, dict) else {}
     except ValueError:
         return {}
+    return obj if isinstance(obj, dict) else {}
 
 
-def _lock_info_str(root: Path) -> str:
-    info = maintenance_lock_info(root)
-    if not info:
-        return "no owner metadata (pre-r13 lock or owner mid-acquire)"
-    return (
-        f"owner pid {info.get('pid')} on {info.get('host')}, "
-        f"acquired {info.get('acquired_utc')}"
-    )
-
-
-def release_stale_maintenance_lock(
-    root: Path, max_age_sec: float | None = None, force: bool = False
+def release_stale_lock(
+    root: Path, name: str, max_age_sec: float | None = None, force: bool = False
 ) -> dict:
-    """Operator recovery for a dead maintainer's lock — the documented
-    staleness contract (VERDICT r12 #4). Removes the lock ONLY when
-    there is evidence the owner is gone:
+    """Operator recovery for a dead owner's lock. Removes it only on
+    evidence the owner is gone:
 
-    - the recorded pid no longer exists on THIS host (the common
-      single-host recovery), or
-    - liveness is UNVERIFIABLE (other host, or unparseable pid),
-      ``max_age_sec`` is given, and the lock's last heartbeat
-      (``heartbeat_utc``; falls back to ``acquired_utc`` for pre-r14
-      locks) is older — a true LEASE bound, since maintainers refresh
-      the heartbeat continuously: a background tick every
-      ``heartbeat_interval_sec`` through compaction's batched rewrite
-      (ADVICE r14 #1 — the longest phase is covered, so any
-      ``max_age_sec`` comfortably above the tick interval is safe),
-      plus per vacuum pass and at each commit sequence
-      (:func:`_heartbeat_lock`), or
-    - ``force=True`` (the operator asserts out-of-band knowledge —
-      required for a lock with no metadata, where liveness cannot be
-      checked).
+    - the recorded pid no longer exists on THIS host (the next
+      :meth:`FileLease.acquire` also reclaims this case by itself), or
+    - liveness is unverifiable (another host, no metadata, unparseable
+      pid), ``max_age_sec`` is given, and the last ``heartbeat_utc``
+      (``acquired_utc`` for older locks) is older — a true lease,
+      since maintainers heartbeat through every long phase, or
+    - ``force=True``: the operator asserts out-of-band knowledge. A
+      lock without metadata can only be released this way.
 
-    Refuses (raises RuntimeError) otherwise: a same-host lock whose
-    pid is VERIFIED ALIVE is never stale — the age bound does not
-    apply to it at all (ADVICE r13 #1: age must only decide where
-    liveness cannot be checked). Returns the removed lock's
-    metadata."""
+    A same-host owner whose pid is verified alive is never stale,
+    whatever the lock's age. Raises RuntimeError on refusal, or if the
+    lock changed while being removed; returns the removed metadata."""
     root = Path(root)
-    info = maintenance_lock_info(root)
+    info = lock_info(root, name)
     if info is None:
-        raise RuntimeError(f"no {MAINT_LOCK} present under {root}")
+        raise RuntimeError(f"no {name} present under {root}")
     if not force:
-        reason = None
-        verified_alive = False
-        if info and info.get("host") == socket.gethostname():
-            try:
-                os.kill(int(info["pid"]), 0)
-                verified_alive = True
-            except (ProcessLookupError, ValueError):
-                reason = f"pid {info.get('pid')} is dead on this host"
-            except PermissionError:
-                verified_alive = True  # exists, owned by someone else
-        if verified_alive:
+        alive = FileLease.alive(info)
+        if alive:
             raise RuntimeError(
-                f"refusing to release {MAINT_LOCK} [{_lock_info_str(root)}]: "
+                f"refusing to release {name} [{FileLease.describe(info)}]: "
                 "owner pid is VERIFIED ALIVE on this host — not provably "
                 "dead whatever the lock's age (no max_age_sec override); "
                 "stop that process first"
             )
-        ts = info.get("heartbeat_utc") or info.get("acquired_utc")
-        if reason is None and max_age_sec is not None and ts:
-            try:
-                beat = datetime.fromisoformat(ts)
-                age = (datetime.now(timezone.utc) - beat).total_seconds()
-                if age > max_age_sec:
-                    reason = (
-                        f"last heartbeat {age:.0f}s ago exceeds the "
-                        f"{max_age_sec:.0f}s lease"
-                    )
-            except ValueError:
-                pass
-        if reason is None:
+        try:
+            ts = info.get("heartbeat_utc") or info.get("acquired_utc")
+            age = (
+                datetime.now(timezone.utc) - datetime.fromisoformat(ts)
+            ).total_seconds()
+        except (TypeError, ValueError):
+            age = None
+        if alive is None and (
+            max_age_sec is None or age is None or age <= max_age_sec
+        ):
             raise RuntimeError(
-                f"refusing to release {MAINT_LOCK} [{_lock_info_str(root)}]: "
+                f"refusing to release {name} [{FileLease.describe(info)}]: "
                 "owner not provably dead (liveness unverifiable and no "
                 "max_age_sec lease exceeded since the last heartbeat); "
                 "pass force=True only with out-of-band knowledge the "
-                "maintainer is gone"
+                "owner is gone"
             )
-    _release_maintenance_lock(root)
-    return info
-
-
-def _release_maintenance_lock(root: Path) -> None:
-    (root / MAINT_LOCK).unlink(missing_ok=True)
-
-
-def _release_owned_lock(root: Path) -> None:
-    """Maintainer-exit release that only removes a lock THIS process
-    still owns (ADVICE r14 #1): if the lease was lost mid-run (an
-    operator force-released and a second maintainer re-acquired), the
-    lock on disk is the NEW owner's — unlinking it here would yank a
-    live maintainer's lock, the exact fall-through the lease exists
-    to prevent. A missing or foreign-owned lock is left untouched;
-    ownership means pid + host + this acquire's fencing token
-    (ADVICE r15 #1 — pid/host alone can be satisfied by a recycled
-    pid or a same-process re-acquire)."""
-    key = str(Path(root).resolve())
-    info = maintenance_lock_info(root)
-    if info is None:
-        _LOCK_TOKENS.pop(key, None)
-        return
-    try:
-        owner_pid = int(info.get("pid"))
-    except (TypeError, ValueError):
-        owner_pid = None
-    if (
-        owner_pid == os.getpid()
-        and info.get("host") == socket.gethostname()
-        and (
-            info.get("token") is None  # pre-r16 lock format
-            or info.get("token") == _LOCK_TOKENS.get(key)
-        )
-    ):
-        _release_maintenance_lock(root)
-    _LOCK_TOKENS.pop(key, None)
-
-
-def append_lock_info(root: Path) -> dict | None:
-    """The appender lease's owner metadata (same shape/contract as
-    :func:`maintenance_lock_info`): ``{}`` for a metadata-less lock,
-    ``None`` if no lease is held."""
-    p = Path(root) / APPEND_LOCK
-    try:
-        body = p.read_text()
-    except FileNotFoundError:
-        return None
-    try:
-        obj = json.loads(body)
-        return obj if isinstance(obj, dict) else {}
-    except ValueError:
-        return {}
-
-
-def _append_lock_str(root: Path) -> str:
-    info = append_lock_info(root)
-    if not info:
-        return "no owner metadata (owner mid-acquire or crashed)"
-    return (
-        f"owner pid {info.get('pid')} on {info.get('host')}, "
-        f"acquired {info.get('acquired_utc')}"
-    )
-
-
-def _owner_provably_dead(info: dict | None) -> bool:
-    """True only when the lock names a pid on THIS host that no
-    longer exists — the one case a lock can be reclaimed without
-    operator judgment. Unverifiable (other host, no/unparseable
-    metadata) is NOT dead."""
-    if not info or info.get("host") != socket.gethostname():
-        return False
-    try:
-        os.kill(int(info["pid"]), 0)
-        return False
-    except (ProcessLookupError, ValueError, TypeError):
-        return True
-    except PermissionError:
-        return False  # exists, owned by another user
-
-
-class _appender_lease:
-    """Single-appender enforcement (VERDICT r15 #2): O_CREAT|O_EXCL
-    on ``_append.lock``, held for the caller's whole write+commit via
-    ``with``. A second concurrent appender REFUSES with the owner's
-    metadata instead of interleaving ledger/manifest read-modify-
-    writes (the lost-batch risk the r15 verdict named).
-
-    Crashed-appender recovery is automatic where death is PROVABLE:
-    on FileExistsError the acquire reads the owner and, if its pid is
-    dead on this host, claims the stale lease through an atomic
-    ``os.rename`` to a unique name — rename is an atomic claim (two
-    reclaimers racing it: exactly one succeeds, the loser retries
-    the O_EXCL create and finds the winner's fresh lock). A live or
-    unverifiable owner is never reclaimed here —
-    :func:`release_stale_append_lock` is the operator path (age
-    lease / force), mirroring the maintenance-lock contract.
-
-    Exit releases only a lease THIS process still owns (pid/host
-    check) — if an operator force-released and another appender
-    acquired mid-run, the new owner's lease survives."""
-
-    _RETRIES = 3
-
-    def __init__(self, root: Path):
-        self.root = Path(root)
-
-    def __enter__(self) -> "_appender_lease":
-        path = self.root / APPEND_LOCK
-        for _ in range(self._RETRIES):
-            try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                info = append_lock_info(self.root)
-                if info is not None and _owner_provably_dead(info):
-                    claim = path.with_name(
-                        f"{APPEND_LOCK}.stale-{uuid.uuid4().hex[:8]}"
-                    )
-                    try:
-                        os.rename(path, claim)  # atomic claim
-                        claim.unlink(missing_ok=True)
-                    except FileNotFoundError:
-                        pass  # another reclaimer won the rename
-                    continue  # retry the O_EXCL create
-                raise RuntimeError(
-                    f"another appender holds {APPEND_LOCK} for "
-                    f"{self.root} [{_append_lock_str(self.root)}]; one "
-                    "appender per index — retry after it commits, or "
-                    "release_stale_append_lock if it is known dead"
-                ) from None
-            try:
-                os.write(
-                    fd,
-                    json.dumps(
-                        {
-                            "pid": os.getpid(),
-                            "host": socket.gethostname(),
-                            "acquired_utc": datetime.now(
-                                timezone.utc
-                            ).isoformat(timespec="seconds"),
-                        }
-                    ).encode(),
-                )
-            finally:
-                os.close(fd)
-            return self
-        raise RuntimeError(
-            f"could not acquire {APPEND_LOCK} for {self.root} after "
-            f"{self._RETRIES} reclaim attempts — live contention; "
-            "one appender per index"
-        )
-
-    def __exit__(self, *exc) -> None:
-        info = append_lock_info(self.root)
-        if (
-            info is not None
-            and (
-                not info  # metadata-less: our create crashed mid-write
-                or (
-                    str(info.get("pid")) == str(os.getpid())
-                    and info.get("host") == socket.gethostname()
-                )
-            )
-        ):
-            (self.root / APPEND_LOCK).unlink(missing_ok=True)
-
-
-def release_stale_append_lock(
-    root: Path, max_age_sec: float | None = None, force: bool = False
-) -> dict:
-    """Operator recovery for a dead appender's lease — the
-    :func:`release_stale_maintenance_lock` contract applied to the
-    appender lock: release when the recorded pid is dead on THIS
-    host, when liveness is unverifiable and the lease's
-    ``acquired_utc`` is older than ``max_age_sec`` (appends do not
-    heartbeat — a batch commit is bounded, so acquire age IS the
-    lease age), or with ``force=True``; refuse otherwise. Note the
-    provably-dead same-host case is also auto-reclaimed by the next
-    acquire — this function exists for the unverifiable ones."""
-    root = Path(root)
-    info = append_lock_info(root)
-    if info is None:
-        raise RuntimeError(f"no {APPEND_LOCK} present under {root}")
-    if not force:
-        reason = None
-        if info and info.get("host") == socket.gethostname():
-            if _owner_provably_dead(info):
-                reason = f"pid {info.get('pid')} is dead on this host"
-            else:
-                raise RuntimeError(
-                    f"refusing to release {APPEND_LOCK} "
-                    f"[{_append_lock_str(root)}]: owner pid is VERIFIED "
-                    "ALIVE on this host — stop that appender first"
-                )
-        ts = info.get("acquired_utc")
-        if reason is None and max_age_sec is not None and ts:
-            try:
-                beat = datetime.fromisoformat(ts)
-                age = (datetime.now(timezone.utc) - beat).total_seconds()
-                if age > max_age_sec:
-                    reason = (
-                        f"acquired {age:.0f}s ago exceeds the "
-                        f"{max_age_sec:.0f}s lease"
-                    )
-            except ValueError:
-                pass
-        if reason is None:
-            raise RuntimeError(
-                f"refusing to release {APPEND_LOCK} "
-                f"[{_append_lock_str(root)}]: owner not provably dead "
-                "(liveness unverifiable and no max_age_sec lease "
-                "exceeded); pass force=True only with out-of-band "
-                "knowledge the appender is gone"
-            )
-    (root / APPEND_LOCK).unlink(missing_ok=True)
+    if not FileLease(root, name)._remove_if(info):
+        raise RuntimeError(f"{name} changed while being released; re-check")
     return info
 
 
@@ -889,19 +668,21 @@ def _refuse_if_maintenance(root: Path, cleanup: Path | None = None) -> None:
     both proceed.
 
     Also refuses while a committed compaction manifest is pending
-    (ADVICE r13 #3): after an operator releases a DEAD compactor's
-    lock, the half-applied state (adds moved in, deletes not yet
-    unlinked) is exactly the one where this committer's walk-derived
-    epoch would fold both copies of a row into the live set — the
-    recovery order is release the lock, then run compact_ann_index
-    (which replays the manifest under the lock), THEN resume ingest."""
-    if (root / MAINT_LOCK).exists():
+    (ADVICE r13 #3): once a DEAD compactor's lock is gone, the
+    half-applied state (adds moved in, deletes not yet unlinked) is
+    exactly the one where this committer's walk-derived epoch would
+    fold both copies of a row into the live set. Recovery is to run
+    compact_ann_index, which reclaims a same-host dead owner's lock
+    (``release_stale_lock`` first for any other) and replays the
+    manifest under it, THEN resume ingest."""
+    info = lock_info(root, MAINT_LOCK)
+    if info is not None:
         if cleanup is not None:
             shutil.rmtree(cleanup, ignore_errors=True)
         raise RuntimeError(
             f"index maintenance in progress ({MAINT_LOCK} present, "
-            f"{_lock_info_str(root)}); retry the batch after compaction "
-            "finishes"
+            f"{FileLease.describe(info)}); retry the batch after "
+            "compaction finishes"
         )
     if (root / PENDING_NAME).exists():
         if cleanup is not None:
@@ -936,8 +717,8 @@ def append_ann_index(
     contract). At 100 TB this is the streaming-sink shape: a
     foreachBatch writer appending each micro-batch's coded rows.
 
-    Holds the APPENDER LEASE for the whole write+commit (VERDICT r15
-    #2 — the single-writer contract was previously a docstring): a
+    Holds the APPENDER LEASE (a :class:`FileLease` on ``APPEND_LOCK``)
+    for the whole write+commit (VERDICT r15 #2 — the single-writer contract was previously a docstring): a
     second concurrent appender refuses instead of interleaving the
     walk-derived epoch commit's read-modify-write. The lease also
     completes the maintenance handshake for this batch API: it is
@@ -948,7 +729,7 @@ def append_ann_index(
     arrives second. Commits a new epoch manifest after the write,
     which is the point the batch becomes visible to
     manifest-resolving readers."""
-    with _appender_lease(Path(idx_dir)):
+    with FileLease(Path(idx_dir), APPEND_LOCK):
         _refuse_if_maintenance(Path(idx_dir))
         cents, cbres, rotation = load_meta(idx_dir)
         (
@@ -1229,7 +1010,7 @@ def ann_index_stream_writer(idx_dir: str):
         # to the same index could race — under the lease the second
         # query's batch refuses (foreachBatch retries it) instead of
         # losing a ledger update
-        with _appender_lease(Path(idx_dir)):
+        with FileLease(Path(idx_dir), APPEND_LOCK):
             _write_locked(batch, batch_id)
 
     def _write_locked(batch: DataFrame, batch_id: int) -> None:
@@ -1337,14 +1118,17 @@ def compact_ann_index(
     entries — not yet).
 
     The maintenance lock is a live LEASE through the whole run
-    (ADVICE r14 #1): a daemon-thread heartbeat
-    (:class:`_LeaseHeartbeat`, ``heartbeat_interval_sec``) refreshes
+    (ADVICE r14 #1): a background ticker
+    (:meth:`FileLease.ticking`, ``heartbeat_interval_sec``) refreshes
     ``heartbeat_utc`` during the batched rewrite — the longest
     un-checkpointed phase — and the commit sequence begins with an
-    ownership-VERIFYING main-thread heartbeat, so a lease lost
-    mid-rewrite (operator force-release + second maintainer acquire)
-    aborts with ZERO commits and leaves the new owner's lock
-    untouched (:func:`_release_owned_lock`).
+    ownership-VERIFYING main-thread :meth:`FileLease.heartbeat`, so a
+    lease lost mid-rewrite (operator force-release + second maintainer
+    acquire) aborts with ZERO commits and leaves the new owner's lock
+    untouched (:meth:`FileLease.release` checks the fencing token). A
+    lock whose owner is provably dead on this host is reclaimed by
+    the acquire; the replay below then finishes whatever that owner
+    left pending.
 
     Crash-safe by roll-forward: the rewrites land in ``_compacting/``
     (invisible to readers), then ONE manifest naming every cell's
@@ -1391,16 +1175,15 @@ def compact_ann_index(
     commit point."""
     root = Path(idx_dir)
     pending = root / PENDING_NAME
-    _acquire_maintenance_lock(root)
     # epochs_committed counts EVERY epoch this call commits, replay
     # included (ADVICE r15 #4: reporting only the fresh compaction
     # made bench's measured epoch_delta read 2 against a reported 1
     # whenever the call first replayed a dead maintainer's manifest)
     committed = 0
-    try:
+    with FileLease(root, MAINT_LOCK) as lease:
         if pending.exists():  # finish an interrupted apply first
             _apply_compaction(
-                root,
+                lease,
                 json.loads(pending.read_text()),
                 heartbeat_interval_sec=heartbeat_interval_sec,
             )
@@ -1427,12 +1210,12 @@ def compact_ann_index(
             return {"cells_compacted": 0, "epochs_committed": committed}
         tmp_root = root / "_compacting"
         shutil.rmtree(tmp_root, ignore_errors=True)
-        with _LeaseHeartbeat(root, heartbeat_interval_sec) as hb:
+        with lease.ticking(heartbeat_interval_sec):
             _rewrite_cells(spark, root, to_do, tmp_root)
-        hb.check()  # a lease lost mid-rewrite aborts with zero commits
-        # ownership-verifying refresh opening the commit sequence:
-        # deterministic even when the rewrite outran every thread tick
-        _heartbeat_lock(root)
+        # ownership-verifying refresh opening the commit sequence: a
+        # lease lost mid-rewrite (a failed tick, or a lock that now
+        # names another owner) aborts here with zero commits
+        lease.heartbeat()
         manifest = {
             "cells": [
                 {
@@ -1448,12 +1231,10 @@ def compact_ann_index(
         }
         _atomic_write_json(pending, manifest)  # THE commit point
         _apply_compaction(
-            root, manifest, heartbeat_interval_sec=heartbeat_interval_sec
+            lease, manifest, heartbeat_interval_sec=heartbeat_interval_sec
         )
         committed += 1
         shutil.rmtree(tmp_root, ignore_errors=True)
-    finally:
-        _release_owned_lock(root)
     return {"cells_compacted": len(to_do), "epochs_committed": committed}
 
 
@@ -1490,19 +1271,18 @@ def _refuse_if_ingest_active(root: Path) -> None:
     # maintenance lock; the appender re-checks that lock after taking
     # its lease, so whichever side lands second refuses. A dead
     # appender's lease is auto-reclaimed at the next acquire
-    # (provably-dead pid) or via release_stale_append_lock.
-    if (root / APPEND_LOCK).exists() and not _owner_provably_dead(
-        append_lock_info(root)
-    ):
+    # (provably-dead pid) or via release_stale_lock.
+    info = lock_info(root, APPEND_LOCK)
+    if info is not None and FileLease.alive(info) is not False:
         raise RuntimeError(
             f"maintenance refused: an appender holds {APPEND_LOCK} "
-            f"[{_append_lock_str(root)}]; retry after its batch "
-            "commits (release_stale_append_lock if it is known dead)"
+            f"[{FileLease.describe(info)}]; retry after its batch "
+            "commits (release_stale_lock if it is known dead)"
         )
 
 
 def _apply_compaction(
-    root: Path, manifest: dict, heartbeat_interval_sec: float = 15.0
+    lease: FileLease, manifest: dict, heartbeat_interval_sec: float = 15.0
 ) -> None:
     """Roll a committed compaction manifest forward — idempotent:
     a missing add-source was already moved, deletes are unlink-if-
@@ -1539,10 +1319,11 @@ def _apply_compaction(
     recomputes the identical state (idempotent set arithmetic;
     duplicate same-content epoch commits are benign) — so a failed
     tick stops ticking rather than aborting the roll-forward."""
+    root = lease.root
     ents = manifest["cells"] if "cells" in manifest else [manifest]
     grace = bool(manifest.get("vacuum_grace"))
     tmp_root = root / "_compacting"
-    with _LeaseHeartbeat(root, heartbeat_interval_sec):
+    with lease.ticking(heartbeat_interval_sec):
         for ent in ents:
             cell_dir = root / ent["cell"]
             tmp = tmp_root / ent["cell"]
@@ -1609,8 +1390,9 @@ def vacuum_ann_index(
       stamp falls back to its history file's mtime; if even that is
       gone the entry is KEPT (unknown age is never reclaimable).
 
-    Runs under the maintenance lock (replaying any pending compaction
-    manifest first, same recovery duty as compact_ann_index) and
+    Runs under the maintenance lock, a :class:`FileLease` on
+    ``MAINT_LOCK`` (replaying any pending compaction manifest first,
+    same recovery duty as compact_ann_index) and
     refuses while ingest is active (single-maintainer contract — the
     ledger read-modify-write must not race another committer). The
     lock is a live lease through the reclaim loop — a background tick
@@ -1618,17 +1400,16 @@ def vacuum_ann_index(
     heartbeat before the ledger commit, the same coverage as
     compaction's rewrite (ADVICE r14 #1)."""
     root = Path(idx_dir)
-    _acquire_maintenance_lock(root)
-    try:
+    with FileLease(root, MAINT_LOCK) as lease:
         pending = root / PENDING_NAME
         if pending.exists():  # a dead compactor's half-applied state
             _apply_compaction(
-                root,
+                lease,
                 json.loads(pending.read_text()),
                 heartbeat_interval_sec=heartbeat_interval_sec,
             )
         _refuse_if_ingest_active(root)
-        _heartbeat_lock(root)
+        lease.heartbeat()
         cur = _load_current(root)
         if cur is None or not cur.get("retired"):
             return {"files_removed": 0, "entries_kept": 0}
@@ -1657,15 +1438,15 @@ def vacuum_ann_index(
         # lease refresh as compaction's rewrite (ADVICE r14 #1 applied
         # symmetrically): a cross-host age-based release can never
         # yank a live vacuum mid-reclaim
-        with _LeaseHeartbeat(root, heartbeat_interval_sec) as hb:
+        with lease.ticking(heartbeat_interval_sec):
             for ent in cur["retired"]:
                 # short-circuit on a lost lease (ADVICE r15 #5): the
                 # unlinks are destructive, so stop reclaiming at the
                 # first failed tick instead of only aborting the
                 # ledger commit at the end — symmetric with
-                # compaction's abort-with-zero-commits (hb.check
+                # compaction's abort-with-zero-commits (the heartbeat
                 # below raises, so nothing kept here is committed)
-                if hb.error is not None:
+                if lease.lost is not None:
                     break
                 if int(ent["epoch"]) <= horizon and _age_passed(ent):
                     for rel_name in ent["files"]:
@@ -1683,12 +1464,10 @@ def vacuum_ann_index(
                             pass
                 else:
                     kept.append(ent)
-        hb.check()  # a lost lease aborts before the ledger commit
-        _heartbeat_lock(root)  # ownership-verifying, pre-commit
+        # ownership-verifying, pre-commit: a lost lease aborts here
+        lease.heartbeat()
         _commit_current(root, cur["files"], retired=kept)
         return {"files_removed": removed, "entries_kept": len(kept)}
-    finally:
-        _release_owned_lock(root)
 
 
 def register_index(sf_dir: str, idx_dir: str) -> None:

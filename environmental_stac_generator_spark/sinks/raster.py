@@ -805,8 +805,8 @@ def write_netcdf_slices(
     file's LONG rows as a pandas frame — 10-20x the file's data bytes
     (object-dtype strings per cell) plus the encoder's sorted copy.
     Fine for modest files; for the canonical 278 MB / 34.7M-cell file
-    (BASELINE.md) use :func:`write_netcdf_slices_grids` (the engine's
-    ``packed_encode=True`` default), whose group is one row per SLAB
+    (BASELINE.md) use :func:`write_netcdf_slices_grids` (what
+    ``EnvStacEngine.process`` runs), whose group is one row per SLAB
     and peaks at ~2x the file's data bytes — byte-identical output."""
     out = str(out_dir)
 

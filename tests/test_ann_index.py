@@ -700,10 +700,10 @@ def test_maintenance_lock_mutual_exclusion(spark, tmp_path, monkeypatch):
     root = AI.Path(idx)
     batch = _synth_embeddings(spark, range(1000, 1020), shift=3)
     # maintainer holds the lock -> writer refuses up front
-    AI._acquire_maintenance_lock(root)
+    lease = AI.FileLease(root, AI.MAINT_LOCK).acquire()
     # staleness metadata (VERDICT r12 #4): owner pid/host/acquire time
     # are in the lock body, and refusal messages quote them
-    info = AI.maintenance_lock_info(root)
+    info = AI.lock_info(root, AI.MAINT_LOCK)
     assert info["pid"] == AI.os.getpid()
     assert info["host"] == AI.socket.gethostname()
     AI.datetime.fromisoformat(info["acquired_utc"])  # parses
@@ -713,10 +713,10 @@ def test_maintenance_lock_mutual_exclusion(spark, tmp_path, monkeypatch):
         AI.ann_index_stream_writer(idx)(batch, 1)
     # a second maintainer cannot acquire it (message quotes the owner)
     with pytest.raises(RuntimeError, match="another maintainer"):
-        AI._acquire_maintenance_lock(root)
+        AI.FileLease(root, AI.MAINT_LOCK).acquire()
     with pytest.raises(RuntimeError, match=f"pid {AI.os.getpid()}"):
-        AI._acquire_maintenance_lock(root)
-    AI._release_maintenance_lock(root)
+        AI.FileLease(root, AI.MAINT_LOCK).acquire()
+    lease.release()
     # the TOCTOU interleaving itself: the lock lands AFTER the
     # writer's up-front check — simulate by acquiring it from inside
     # the first post-check filesystem op (the staging-marker mkdir),
@@ -730,14 +730,14 @@ def test_maintenance_lock_mutual_exclusion(spark, tmp_path, monkeypatch):
         # the parent — acquire once, not per re-entry
         if (self.name == "1" and self.parent.name == "_staging"
                 and not (root / AI.MAINT_LOCK).exists()):
-            AI._acquire_maintenance_lock(root)
+            lease.acquire()
 
     monkeypatch.setattr(AI.Path, "mkdir", _mkdir_then_lock)
     with pytest.raises(RuntimeError, match="maintenance in progress"):
         AI.ann_index_stream_writer(idx)(batch, 1)
     monkeypatch.setattr(AI.Path, "mkdir", real_mkdir)
     assert not (root / "_staging" / "1").exists()  # marker cleaned up
-    AI._release_maintenance_lock(root)
+    lease.release()
     # nothing landed: the aborted batch replays cleanly afterwards
     AI.ann_index_stream_writer(idx)(batch, 1)
     assert spark.read.parquet(idx).count() == 80 + 20
@@ -1041,7 +1041,8 @@ def test_reader_snapshot_isolation_mid_compaction_apply(
     with pytest.raises(RuntimeError, match="injected"):
         AI.compact_ann_index(spark, idx)
     monkeypatch.setattr(AI.os, "replace", crash.real)
-    AI._release_maintenance_lock(root)  # owner "died"; operator recovery
+    # owner "died"; operator recovery
+    (root / AI.MAINT_LOCK).unlink(missing_ok=True)
     assert _manifest_reader_rows(spark, idx) == expected
     assert (root / "_ann_compaction.json").exists()
 
@@ -1058,7 +1059,7 @@ def test_reader_snapshot_isolation_mid_compaction_apply(
     with pytest.raises(RuntimeError, match="post-swap"):
         AI.compact_ann_index(spark, idx)
     monkeypatch.setattr(AI, "_commit_current", real_commit)
-    AI._release_maintenance_lock(root)
+    (root / AI.MAINT_LOCK).unlink(missing_ok=True)
     assert calls["n"] == 1
     # the compacted cell's adds are live, its doomed files still on
     # disk — the manifest must hide them: exactly one copy of each row
@@ -1118,14 +1119,14 @@ def test_append_refuses_under_maintenance_lock(spark, tmp_path):
     )
     idx = str(tmp_path / "idx")
     assert AI.build_ann_index(spark, corpus, idx) is not None
-    AI._acquire_maintenance_lock(AI.Path(idx))
+    lease = AI.FileLease(AI.Path(idx), AI.MAINT_LOCK).acquire()
     try:
         with pytest.raises(RuntimeError, match="maintenance in progress"):
             AI.append_ann_index(
                 spark, _synth_embeddings(spark, range(1000, 1010), shift=3), idx
             )
     finally:
-        AI._release_maintenance_lock(AI.Path(idx))
+        lease.release()
 
 
 def test_release_stale_maintenance_lock_contract(tmp_path):
@@ -1138,9 +1139,9 @@ def test_release_stale_maintenance_lock_contract(tmp_path):
 
     root = AI.Path(tmp_path)
     # live owner (this process): refuse
-    AI._acquire_maintenance_lock(root)
+    AI.FileLease(root, AI.MAINT_LOCK).acquire()
     with pytest.raises(RuntimeError, match="not provably dead"):
-        AI.release_stale_maintenance_lock(root)
+        AI.release_stale_lock(root, AI.MAINT_LOCK)
     assert (root / AI.MAINT_LOCK).exists()
     # dead pid on this host: release
     p = subprocess.Popen(["true"])
@@ -1152,7 +1153,7 @@ def test_release_stale_maintenance_lock_contract(tmp_path):
             "acquired_utc": "2026-08-16T00:00:00+00:00",
         })
     )
-    info = AI.release_stale_maintenance_lock(root)
+    info = AI.release_stale_lock(root, AI.MAINT_LOCK)
     assert info["pid"] == p.pid
     assert not (root / AI.MAINT_LOCK).exists()
     # other-host lock: pid liveness unverifiable -> age bound decides
@@ -1164,18 +1165,18 @@ def test_release_stale_maintenance_lock_contract(tmp_path):
         })
     )
     with pytest.raises(RuntimeError, match="not provably dead"):
-        AI.release_stale_maintenance_lock(root)
-    AI.release_stale_maintenance_lock(root, max_age_sec=3600)
+        AI.release_stale_lock(root, AI.MAINT_LOCK)
+    AI.release_stale_lock(root, AI.MAINT_LOCK, max_age_sec=3600)
     assert not (root / AI.MAINT_LOCK).exists()
     # metadata-less (pre-r13 / mid-acquire) lock: force required
     (root / AI.MAINT_LOCK).touch()
     with pytest.raises(RuntimeError, match="not provably dead"):
-        AI.release_stale_maintenance_lock(root)
-    AI.release_stale_maintenance_lock(root, force=True)
+        AI.release_stale_lock(root, AI.MAINT_LOCK)
+    AI.release_stale_lock(root, AI.MAINT_LOCK, force=True)
     assert not (root / AI.MAINT_LOCK).exists()
     # no lock at all: distinct error
     with pytest.raises(RuntimeError, match="no _maintenance.lock"):
-        AI.release_stale_maintenance_lock(root)
+        AI.release_stale_lock(root, AI.MAINT_LOCK)
 
 
 def test_vacuum_grace_compaction_lifecycle(spark, tmp_path):
@@ -1249,12 +1250,12 @@ def test_vacuum_grace_compaction_lifecycle(spark, tmp_path):
 
     # vacuum is a maintenance op: it refuses while another maintainer
     # holds the lock
-    AI._acquire_maintenance_lock(root)
+    lease = AI.FileLease(root, AI.MAINT_LOCK).acquire()
     try:
         with pytest.raises(RuntimeError, match="another maintainer"):
             AI.vacuum_ann_index(idx)
     finally:
-        AI._release_maintenance_lock(root)
+        lease.release()
 
 
 @pytest.mark.parametrize(
@@ -1295,7 +1296,7 @@ def test_compaction_crash_sweep_exactly_once(
         assert "injected" in str(exc)
     monkeypatch.setattr(AI.os, "replace", crash.real)
     if (root / AI.MAINT_LOCK).exists():  # only on a non-finally death
-        AI.release_stale_maintenance_lock(root, force=True)
+        AI.release_stale_lock(root, AI.MAINT_LOCK, force=True)
     assert _manifest_reader_rows(spark, idx) == expected, (site, nth)
     AI.register_index_view(spark, idx, "sweep_view")
     assert sorted(
@@ -1503,7 +1504,7 @@ def test_catalog_view_snapshot_isolation_mid_apply(
     with pytest.raises(RuntimeError, match="post-swap"):
         AI.compact_ann_index(spark, idx, vacuum_grace=True)
     monkeypatch.setattr(AI, "_commit_current", real_commit)
-    AI._release_maintenance_lock(root)
+    (root / AI.MAINT_LOCK).unlink(missing_ok=True)
     # double-copy state exists on disk; BOTH views must hide it
     assert spark.read.parquet(idx).count() > len(expected)
     AI.register_index_view(spark, idx, "mid_view")
@@ -1531,18 +1532,18 @@ def test_heartbeat_lease_contract(tmp_path):
 
     root = AI.Path(tmp_path)
     # same-host ALIVE pid: age bound must NOT apply (ADVICE r13 #1)
-    AI._acquire_maintenance_lock(root)
+    lease = AI.FileLease(root, AI.MAINT_LOCK).acquire()
     with pytest.raises(RuntimeError, match="VERIFIED ALIVE"):
-        AI.release_stale_maintenance_lock(root, max_age_sec=0.0)
+        AI.release_stale_lock(root, AI.MAINT_LOCK, max_age_sec=0.0)
     assert (root / AI.MAINT_LOCK).exists()
     # the owner's heartbeat refreshes heartbeat_utc, not acquired_utc
-    info0 = AI.maintenance_lock_info(root)
+    info0 = AI.lock_info(root, AI.MAINT_LOCK)
     _time.sleep(1.1)  # timespec is seconds
-    AI._heartbeat_lock(root)
-    info1 = AI.maintenance_lock_info(root)
+    lease.heartbeat()
+    info1 = AI.lock_info(root, AI.MAINT_LOCK)
     assert info1["acquired_utc"] == info0["acquired_utc"]
     assert info1["heartbeat_utc"] > info0["heartbeat_utc"]
-    AI._release_maintenance_lock(root)
+    lease.release()
     # other-host owner, ancient acquire, FRESH heartbeat: the lease
     # holds — an age-based release attempt must refuse
     now = AI.datetime.now(AI.timezone.utc).isoformat(timespec="seconds")
@@ -1555,7 +1556,7 @@ def test_heartbeat_lease_contract(tmp_path):
         })
     )
     with pytest.raises(RuntimeError, match="not provably dead"):
-        AI.release_stale_maintenance_lock(root, max_age_sec=3600)
+        AI.release_stale_lock(root, AI.MAINT_LOCK, max_age_sec=3600)
     # same lock, STALE heartbeat: the lease expired — released
     (root / AI.MAINT_LOCK).write_text(
         _json.dumps({
@@ -1565,7 +1566,7 @@ def test_heartbeat_lease_contract(tmp_path):
             "heartbeat_utc": "2020-01-01T01:00:00+00:00",
         })
     )
-    info = AI.release_stale_maintenance_lock(root, max_age_sec=3600)
+    info = AI.release_stale_lock(root, AI.MAINT_LOCK, max_age_sec=3600)
     assert info["pid"] == 1
     assert not (root / AI.MAINT_LOCK).exists()
 
@@ -1589,10 +1590,10 @@ def test_committers_refuse_on_pending_compaction(
         AI.compact_ann_index(spark, idx)
     monkeypatch.setattr(AI.os, "replace", crash.real)
     # the in-process finally already dropped the lock (a real crash
-    # leaves it for release_stale_maintenance_lock); the half-applied
+    # leaves it for release_stale_lock); the half-applied
     # manifest is the state committers must now refuse on
     if (root / AI.MAINT_LOCK).exists():
-        AI.release_stale_maintenance_lock(root, force=True)
+        AI.release_stale_lock(root, AI.MAINT_LOCK, force=True)
     assert (root / AI.PENDING_NAME).exists()
     batch = _synth_embeddings(spark, range(7000, 7020), shift=3)
     with pytest.raises(RuntimeError, match="compaction manifest is pending"):
@@ -1719,12 +1720,12 @@ def test_lease_heartbeat_covers_batched_rewrite(spark, tmp_path, monkeypatch):
     seen = {}
 
     def slow_rewrite(spark_, root_, to_do, tmp_root):
-        before = AI.maintenance_lock_info(root_)["heartbeat_utc"]
+        before = AI.lock_info(root_, AI.MAINT_LOCK)["heartbeat_utc"]
         _time.sleep(1.3)  # heartbeat timespec is seconds
         # mid-rewrite, same-host operator: refused on verified liveness
         with pytest.raises(RuntimeError, match="VERIFIED ALIVE"):
-            AI.release_stale_maintenance_lock(root_, max_age_sec=0.0)
-        info = AI.maintenance_lock_info(root_)
+            AI.release_stale_lock(root_, AI.MAINT_LOCK, max_age_sec=0.0)
+        info = AI.lock_info(root_, AI.MAINT_LOCK)
         seen["before"], seen["during"] = before, info["heartbeat_utc"]
         # the lease math a CROSS-host operator would apply: the last
         # heartbeat is fresh (age well under any sane max_age_sec),
@@ -1789,12 +1790,12 @@ def test_compaction_aborts_on_lease_ownership_loss(
     assert int(AI._load_current(root)["epoch"]) == e0
     assert _manifest_reader_rows(spark, idx) == expected
     # the new owner's lock survived the aborting compactor's finally
-    info = AI.maintenance_lock_info(root)
+    info = AI.lock_info(root, AI.MAINT_LOCK)
     assert info and info["pid"] == 1
     assert info["host"] == "second-maintainer-host"
     # recovery: the (dead) second maintainer's lock is releasable by
     # the lease, and a clean rerun compacts normally
-    AI.release_stale_maintenance_lock(root, max_age_sec=3600)
+    AI.release_stale_lock(root, AI.MAINT_LOCK, max_age_sec=3600)
     res = AI.compact_ann_index(spark, idx)
     assert res["cells_compacted"] > 0 and res["epochs_committed"] == 1
     assert _manifest_reader_rows(spark, idx) == expected
@@ -1803,17 +1804,18 @@ def test_compaction_aborts_on_lease_ownership_loss(
 def test_heartbeat_lock_refuses_without_metadata_or_lock(tmp_path):
     """ADVICE r14 'wrong #2': a heartbeat against a metadata-less lock
     must refuse rather than blind-rewrite it with only heartbeat_utc
-    (which would strip release_stale_maintenance_lock's same-host
+    (which would strip release_stale_lock's same-host
     liveness check); a heartbeat against a MISSING lock means the
     lease was lost and must raise too."""
     root = AI.Path(tmp_path)
+    lease = AI.FileLease(root, AI.MAINT_LOCK)
     (root / AI.MAINT_LOCK).write_text("")
     with pytest.raises(RuntimeError, match="no owner metadata"):
-        AI._heartbeat_lock(root)
+        lease.heartbeat()
     assert (root / AI.MAINT_LOCK).read_text() == ""  # preserved
     (root / AI.MAINT_LOCK).unlink()
     with pytest.raises(RuntimeError, match="no longer exists"):
-        AI._heartbeat_lock(root)
+        lease.heartbeat()
     # and a lock someone else owns is never heartbeat-rewritten
     import json as _json
 
@@ -1821,10 +1823,10 @@ def test_heartbeat_lock_refuses_without_metadata_or_lock(tmp_path):
         _json.dumps({"pid": 1, "host": "elsewhere"})
     )
     with pytest.raises(RuntimeError, match="ownership lost"):
-        AI._heartbeat_lock(root)
-    assert AI.maintenance_lock_info(root)["pid"] == 1
-    # _release_owned_lock leaves a foreign lock in place
-    AI._release_owned_lock(root)
+        lease.heartbeat()
+    assert AI.lock_info(root, AI.MAINT_LOCK)["pid"] == 1
+    # release() leaves a foreign lock in place
+    lease.release()
     assert (root / AI.MAINT_LOCK).exists()
 
 
@@ -1995,9 +1997,9 @@ def test_vacuum_lease_covers_reclaim_loop(spark, tmp_path, monkeypatch):
     def slow_load_epoch(r, epoch):
         # called once per retired entry when keep_age_sec is set —
         # the injection point inside the reclaim loop
-        before = AI.maintenance_lock_info(root)["heartbeat_utc"]
+        before = AI.lock_info(root, AI.MAINT_LOCK)["heartbeat_utc"]
         _time.sleep(1.3)  # heartbeat timespec is seconds
-        info = AI.maintenance_lock_info(root)
+        info = AI.lock_info(root, AI.MAINT_LOCK)
         seen["before"], seen["during"] = before, info["heartbeat_utc"]
         return real_load_epoch(r, epoch)
 
@@ -2072,28 +2074,28 @@ def test_apply_lease_tick_keeps_heartbeat_fresh(spark, tmp_path, monkeypatch):
 
     idx, root = _stage_committed_pending(spark, tmp_path, monkeypatch)
     expected = _manifest_reader_rows(spark, idx)
-    AI._acquire_maintenance_lock(root)
+    lease = AI.FileLease(root, AI.MAINT_LOCK).acquire()
     real_load = AI._load_current
     seen = {}
 
     def slow_load(r):
         if "during" not in seen:
-            before = AI.maintenance_lock_info(root)["heartbeat_utc"]
+            before = AI.lock_info(root, AI.MAINT_LOCK)["heartbeat_utc"]
             _time.sleep(1.3)
             seen["before"] = before
-            seen["during"] = AI.maintenance_lock_info(root)["heartbeat_utc"]
+            seen["during"] = AI.lock_info(root, AI.MAINT_LOCK)["heartbeat_utc"]
         return real_load(r)
 
     monkeypatch.setattr(AI, "_load_current", slow_load)
     try:
         AI._apply_compaction(
-            root,
+            lease,
             AI.json.loads((root / AI.PENDING_NAME).read_text()),
             heartbeat_interval_sec=0.05,
         )
     finally:
         monkeypatch.setattr(AI, "_load_current", real_load)
-        AI._release_maintenance_lock(root)
+        lease.release()
     assert seen["during"] > seen["before"], seen
     assert _manifest_reader_rows(spark, idx) == expected
     assert not (root / AI.PENDING_NAME).exists()
@@ -2110,7 +2112,7 @@ def test_apply_rolls_forward_despite_lease_loss(spark, tmp_path, monkeypatch):
 
     idx, root = _stage_committed_pending(spark, tmp_path, monkeypatch)
     expected = _manifest_reader_rows(spark, idx)
-    AI._acquire_maintenance_lock(root)
+    lease = AI.FileLease(root, AI.MAINT_LOCK).acquire()
     real_load = AI._load_current
     hijacked = {}
 
@@ -2126,13 +2128,13 @@ def test_apply_rolls_forward_despite_lease_loss(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(AI, "_load_current", hijack_load)
     try:
         AI._apply_compaction(  # must NOT raise
-            root,
+            lease,
             AI.json.loads((root / AI.PENDING_NAME).read_text()),
             heartbeat_interval_sec=0.05,
         )
     finally:
         monkeypatch.setattr(AI, "_load_current", real_load)
-        AI._release_maintenance_lock(root)
+        (root / AI.MAINT_LOCK).unlink(missing_ok=True)
     assert _manifest_reader_rows(spark, idx) == expected
     assert not (root / AI.PENDING_NAME).exists()
 
@@ -2207,7 +2209,7 @@ def test_heartbeat_refuses_on_foreign_token(tmp_path):
     """ADVICE r15 #1 (fencing token): a lock naming THIS pid/host but
     carrying a different acquire-generation token — a recycled pid,
     or a force-release + re-acquire — must refuse the heartbeat and
-    survive _release_owned_lock; pre-r16 token-less locks keep the
+    survive FileLease.release; pre-r16 token-less locks keep the
     pid/host-only contract."""
     import json as _json
     import os as _os
@@ -2221,16 +2223,17 @@ def test_heartbeat_refuses_on_foreign_token(tmp_path):
         "heartbeat_utc": "2020-01-01T00:00:00+00:00",
         "token": "not-this-acquires-token",
     }
+    lease = AI.FileLease(root, AI.MAINT_LOCK)
     (root / AI.MAINT_LOCK).write_text(_json.dumps(body))
     with pytest.raises(RuntimeError, match="token"):
-        AI._heartbeat_lock(root)
-    AI._release_owned_lock(root)  # foreign token: left in place
+        lease.heartbeat()
+    lease.release()  # foreign token: left in place
     assert (root / AI.MAINT_LOCK).exists()
     # token-less (pre-r16) lock: pid/host contract still applies
     del body["token"]
     (root / AI.MAINT_LOCK).write_text(_json.dumps(body))
-    AI._heartbeat_lock(root)  # must not raise
-    AI._release_owned_lock(root)
+    lease.heartbeat()  # must not raise
+    lease.release()
     assert not (root / AI.MAINT_LOCK).exists()
 
 
@@ -2239,13 +2242,11 @@ def test_acquire_release_roundtrips_token(tmp_path):
     heartbeat verifies it, the owned release removes the lock and
     forgets the token."""
     root = AI.Path(tmp_path)
-    AI._acquire_maintenance_lock(root)
-    key = str(root.resolve())
-    assert AI.maintenance_lock_info(root)["token"] == AI._LOCK_TOKENS[key]
-    AI._heartbeat_lock(root)  # token matches: refresh succeeds
-    AI._release_owned_lock(root)
+    lease = AI.FileLease(root, AI.MAINT_LOCK).acquire()
+    assert AI.lock_info(root, AI.MAINT_LOCK)["token"] == lease.token
+    lease.heartbeat()  # token matches: refresh succeeds
+    lease.release()
     assert not (root / AI.MAINT_LOCK).exists()
-    assert key not in AI._LOCK_TOKENS
 
 
 def test_view_pin_dropped_when_session_collected(spark, tmp_path):
@@ -2308,7 +2309,7 @@ def test_append_refuses_while_appender_lease_held(spark, tmp_path):
     docstring."""
     corpus, idx = _seeded_multi_file_index(spark, tmp_path)
     root = AI.Path(idx)
-    with AI._appender_lease(root):
+    with AI.FileLease(root, AI.APPEND_LOCK):
         batch = _synth_embeddings(spark, range(5000, 5010), shift=3)
         with pytest.raises(RuntimeError, match="another appender"):
             AI.append_ann_index(spark, batch, idx)
@@ -2325,7 +2326,7 @@ def test_maintenance_refuses_while_appender_lease_held(spark, tmp_path):
     next appender)."""
     corpus, idx = _seeded_multi_file_index(spark, tmp_path)
     root = AI.Path(idx)
-    with AI._appender_lease(root):
+    with AI.FileLease(root, AI.APPEND_LOCK):
         with pytest.raises(RuntimeError, match="appender holds"):
             AI.compact_ann_index(spark, idx)
         with pytest.raises(RuntimeError, match="appender holds"):
@@ -2415,6 +2416,39 @@ def test_dead_appender_lease_auto_reclaimed(spark, tmp_path):
     assert not (root / AI.APPEND_LOCK).exists()
 
 
+def test_dead_maintainer_lock_reclaimed_then_pending_replayed(
+    spark, tmp_path, monkeypatch
+):
+    """A compactor that died holding the maintenance lock (a provably
+    dead pid on this host) needs no operator: the next
+    compact_ann_index reclaims the lock and, first thing under it,
+    replays the committed manifest the dead owner left pending."""
+    import json as _json
+    import socket as _socket
+    import subprocess
+
+    idx, root = _stage_committed_pending(spark, tmp_path, monkeypatch)
+    expected = _manifest_reader_rows(spark, idx)
+    e0 = int(AI._load_current(root)["epoch"])
+    p = subprocess.Popen(["true"])  # a pid that has provably exited
+    p.wait()
+    (root / AI.MAINT_LOCK).write_text(
+        _json.dumps({
+            "pid": p.pid,
+            "host": _socket.gethostname(),
+            "acquired_utc": "2020-01-01T00:00:00+00:00",
+            "heartbeat_utc": "2020-01-01T00:00:00+00:00",
+            "token": "dead-maintainers-token",
+        })
+    )
+    res = AI.compact_ann_index(spark, idx)
+    assert res["epochs_committed"] >= 1  # the replay committed
+    assert int(AI._load_current(root)["epoch"]) == e0 + res["epochs_committed"]
+    assert not (root / AI.PENDING_NAME).exists()
+    assert not (root / AI.MAINT_LOCK).exists()
+    assert _manifest_reader_rows(spark, idx) == expected
+
+
 def test_release_stale_append_lock_contract(tmp_path):
     """Alive same-host owner: refuse. Dead pid: release. Other-host
     within age lease: refuse; past it: release. force: release."""
@@ -2425,21 +2459,21 @@ def test_release_stale_append_lock_contract(tmp_path):
 
     root = AI.Path(tmp_path)
     with pytest.raises(RuntimeError, match="no _append.lock"):
-        AI.release_stale_append_lock(root)
+        AI.release_stale_lock(root, AI.APPEND_LOCK)
     # alive owner (this process) refuses
     (root / AI.APPEND_LOCK).write_text(
         _json.dumps({"pid": _os.getpid(), "host": _socket.gethostname()})
     )
     with pytest.raises(RuntimeError, match="VERIFIED ALIVE"):
-        AI.release_stale_append_lock(root, max_age_sec=0.0)
-    AI.release_stale_append_lock(root, force=True)
+        AI.release_stale_lock(root, AI.APPEND_LOCK, max_age_sec=0.0)
+    AI.release_stale_lock(root, AI.APPEND_LOCK, force=True)
     # dead pid releases without force
     p = subprocess.Popen(["true"])
     p.wait()
     (root / AI.APPEND_LOCK).write_text(
         _json.dumps({"pid": p.pid, "host": _socket.gethostname()})
     )
-    info = AI.release_stale_append_lock(root)
+    info = AI.release_stale_lock(root, AI.APPEND_LOCK)
     assert info["pid"] == p.pid
     # other host: age lease applies from acquired_utc
     (root / AI.APPEND_LOCK).write_text(
@@ -2452,7 +2486,7 @@ def test_release_stale_append_lock_contract(tmp_path):
         })
     )
     with pytest.raises(RuntimeError, match="not provably dead"):
-        AI.release_stale_append_lock(root, max_age_sec=3600)
+        AI.release_stale_lock(root, AI.APPEND_LOCK, max_age_sec=3600)
     (root / AI.APPEND_LOCK).write_text(
         _json.dumps({
             "pid": 1,
@@ -2460,5 +2494,5 @@ def test_release_stale_append_lock_contract(tmp_path):
             "acquired_utc": "2020-01-01T00:00:00+00:00",
         })
     )
-    AI.release_stale_append_lock(root, max_age_sec=3600)
+    AI.release_stale_lock(root, AI.APPEND_LOCK, max_age_sec=3600)
     assert not (root / AI.APPEND_LOCK).exists()
